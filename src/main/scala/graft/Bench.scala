@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints exactly one JSON line on stdout —
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -97,13 +95,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val queries = SparkEntry.queries

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The ONE way the measurement tools (Bench, ScaleRehearsal) force a
-  * query: execute the physical plan AS WRITTEN and count its rows.
+/** The ONE way the measurement tools force a query: execute the
+  * physical plan AS WRITTEN and count its rows.
   *
   * NOT `.count()`: that stacks an Aggregate count(1) on top and
   * Catalyst's column pruning then removes every computed column the

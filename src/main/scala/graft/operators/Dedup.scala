@@ -163,21 +163,15 @@ object Dedup {
     * staged so each document is hashed once, not once per join leg.
     *
     * NOTE — eager staging, same contract as [[stagedSignatures]]:
-    * with `stage = true` (the default) merely CONSTRUCTING the
-    * returned DataFrame runs a Spark job and pins MEMORY_AND_DISK
-    * blocks that are freed only when the checkpointed RDD is GC'd, so
-    * a caller that re-builds this frame repeatedly (bench reps,
-    * interactive loops) accumulates executor storage until the driver
-    * GCs the old plans. Pass `stage = false` to keep the plan fully
-    * lazy (each join leg then re-hashes the documents — correct, just
-    * slower) when construction count, not per-query cost, dominates. */
+    * merely CONSTRUCTING the returned DataFrame runs a Spark job and
+    * pins MEMORY_AND_DISK blocks that are freed only when the
+    * checkpointed RDD is GC'd, so a caller that re-builds this frame
+    * repeatedly (bench reps, interactive loops) accumulates executor
+    * storage until the driver GCs the old plans. */
   def jaccardFor(candidates: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String, shingleN: Int,
-      stage: Boolean = true): DataFrame = {
-    val sig = docs.select(col(idCol).as("doc"),
-      shingleHashes(col(textCol), shingleN).as("sh"))
-    jaccardOf(candidates, if (stage) sig.localCheckpoint() else sig)
-  }
+      idCol: String, textCol: String, shingleN: Int): DataFrame =
+    jaccardOf(candidates, docs.select(col(idCol).as("doc"),
+      shingleHashes(col(textCol), shingleN).as("sh")).localCheckpoint())
 
   /** Near-duplicate pairs: banded MinHash-LSH candidates, then exact
     * shingle-Jaccard verification at `threshold`. The scale path: LSH
@@ -372,17 +366,15 @@ object Dedup {
     * id spaces are in general unrelated. */
   def crossNgramJaccard(corpus: DataFrame, corpusIdCol: String,
       evalDocs: DataFrame, evalIdCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.8,
-      stage: Boolean = true): DataFrame = {
+      shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
     require(corpusIdCol != evalIdCol,
       s"corpus and eval id columns must differ, both are '$corpusIdCol'")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold $threshold not in (0,1]")
-    def sigOf(d: DataFrame, idCol: String): DataFrame = {
-      val s = d.filter(size(tokens(col(textCol))) >= shingleN)
+    def sigOf(d: DataFrame, idCol: String): DataFrame =
+      d.filter(size(tokens(col(textCol))) >= shingleN)
         .select(col(idCol).as("doc"), shingleHashes(col(textCol), shingleN).as("sh"))
-      if (stage) s.localCheckpoint() else s
-    }
+        .localCheckpoint()
     val sigC = sigOf(corpus, corpusIdCol)
     val sigE = sigOf(evalDocs, evalIdCol)
     val shC = explodedShingles(sigC)
@@ -682,12 +674,11 @@ object Dedup {
         "doc BIGINT NOT NULL, cluster BIGINT NOT NULL"))
   }
 
-  /** [[duplicateClusters]] plus the CONVERGENCE ROUND COUNT — the
-    * scale-evidence hook: pointer jumping promises O(log diameter)
-    * rounds, and ScaleRehearsal records the observed count at
-    * replicated cluster density to back that claim with a number
-    * instead of an assertion. Always the DISTRIBUTED path (the round
-    * count is the evidence being gathered). */
+  /** [[duplicateClusters]] plus the CONVERGENCE ROUND COUNT, always
+    * on the DISTRIBUTED path — the specs' reference path: they pin the
+    * driver fast path against it, and bound the round count (pointer
+    * jumping promises O(log diameter) rounds) at replicated cluster
+    * density. */
   private[graft] def duplicateClustersWithIters(pairs: DataFrame,
       maxIter: Int = 50): (DataFrame, Int) =
     propagateClusters(undirectedEdges(pairs), maxIter)
@@ -812,7 +803,7 @@ object Dedup {
     * never a recompute of the upstream encode. */
   private[operators] def requireDupSparse(hashes: DataFrame,
       maxPairsPerDoc: Double, alternative: String): Unit = {
-    if (maxPairsPerDoc <= 0) return // explicit opt-out (rehearsals)
+    if (maxPairsPerDoc <= 0) return // explicit opt-out
     val row = hashes.groupBy(col("hash"))
       .agg(count(lit(1)).as("g"))
       .agg(sum(col("g")).as("n"),

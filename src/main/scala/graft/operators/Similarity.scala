@@ -214,9 +214,10 @@ object Similarity {
     * corpus-side index explode stays at `tables` rows per vector. */
   /** Corpus-size-derived plane count (~64 vectors per bucket, clamped
     * to [4, 20] bits) and per-table hyperplane seed — THE definitions
-    * [[nearestDupLsh]] uses, exposed so diagnostics (ScaleRehearsal's
-    * skew histogram) measure the operator's actual key space instead
-    * of a copy that could drift. */
+    * [[nearestDupLsh]] uses. The remaining outside caller is
+    * [[graft.queries.AnnOracles]]: its `embed_nearest_dup_lsh` oracle
+    * draws the operator's own table seeds and re-derives this plane
+    * count, instead of keeping a copy that could drift. */
   private[graft] def derivedPlanes(n: Long): Int = {
     val buckets = math.max(16L, n / 64)
     math.min(20, math.max(4,

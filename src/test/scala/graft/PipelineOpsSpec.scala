@@ -25,17 +25,6 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(lsh === exact)
   }
 
-  test("jaccardFor stage=false (lazy opt-out) equals the staged default") {
-    import spark.implicits._
-    val cands = Seq((0L, 1L)).toDF("doc_a", "doc_b")
-    val a = Dedup.jaccardFor(cands, docs, "doc_id", "text", shingleN = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val b = Dedup.jaccardFor(cands, docs, "doc_id", "text", shingleN = 3,
-        stage = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(a === b)
-  }
-
   test("nearDuplicatesChecked returns the exact pair set with a green lsh_ok flag") {
     val checked = Dedup.nearDuplicatesChecked(docs, "doc_id", "text",
       shingleN = 3, k = 128, bands = 32, threshold = 0.8)

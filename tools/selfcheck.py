@@ -23,15 +23,23 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.loads((out_dir / "oracle_sql.json").read_text())
     n_pass = n_fail = 0
-    for name in sorted(p.name for p in out_dir.iterdir() if p.is_dir()):
-        got_rel = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
-        got_cols = sorted(got_rel.columns)
-        got = con.execute(
-            f"SELECT {', '.join(got_cols)} FROM got_rel ORDER BY ALL"
-        ).fetchall()
-        if name not in oracles:
-            status = f"NO-ORACLE rows={len(got)}"
-            print(f"  {name:24s} {status}")
+    # every DECLARED query is checked: a query whose dump is missing or
+    # unreadable (it crashed in graft.Verify) is a failure, not a skip
+    for name in sorted(oracles):
+        qdir = out_dir / name
+        if not qdir.is_dir():
+            print(f"  {name:24s} FAIL missing: no output directory")
+            n_fail += 1
+            continue
+        try:
+            got_rel = con.sql(f"SELECT * FROM '{qdir}/*.parquet'")
+            got_cols = sorted(got_rel.columns)
+            got = con.execute(
+                f"SELECT {', '.join(got_cols)} FROM got_rel ORDER BY ALL"
+            ).fetchall()
+        except duckdb.Error as e:
+            print(f"  {name:24s} FAIL unreadable: {str(e).splitlines()[0]}")
+            n_fail += 1
             continue
         exp_rel = con.sql(oracles[name])
         exp_cols = sorted(exp_rel.columns)
@@ -59,6 +67,9 @@ def main():
         else:
             print(f"  {name:24s} OK rows={len(got)}")
             n_pass += 1
+    for name in sorted(p.name for p in out_dir.iterdir()
+                       if p.is_dir() and p.name not in oracles):
+        print(f"  {name:24s} NO-ORACLE (not declared)")
     print(f"== {n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
